@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** Session factory with the engine's pinned configuration (SURVEY §4.3).
@@ -60,6 +61,13 @@ object Engine {
       // sources.Layout.writeRangeClustered scopes the conf around its
       // own writes instead (SinkLayoutSuite measures the 12x win).
       .config("spark.ui.enabled", "false")
+      // file:// through java.nio instead of shell forks: without libhadoop,
+      // Hadoop's local filesystem forks `chmod` for every file and `.crc`
+      // the sink writes and `readlink` on every checkpoint-log create and
+      // rename — ~74 process starts per CDC micro-batch (OPTIMIZATION_r20.md).
+      // Only the `file` scheme changes; HDFS/S3 paths are untouched.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def session(appName: String = "graft", cores: Int = 32): SparkSession = {
     val s = configure(

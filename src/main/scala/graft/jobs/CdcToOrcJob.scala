@@ -26,11 +26,15 @@ object CdcToOrcJob {
     run(KafkaSource.stream(spark, bootstrap, topic),
       warehouse, table, checkpoint, trigger)
 
+  /** The job's decode: `payload` envelopes → typed City rows, dropping
+    * the undecodable ones. */
+  def cities(payloads: DataFrame): DataFrame = CdcIngest.parseGood(payloads, "payload")
+
   /** Wire the job from any streaming frame with a `payload` string column
     * (MemoryStream in tests — the S1 batch-equivalence seam).
     *
     * Undecodable payloads are dropped at the source ([[CdcIngest
-    * .goodRecords]]) rather than landing as all-null rows in a
+    * .parseGood]]) rather than landing as all-null rows in a
     * `c_date=__HIVE_DEFAULT_PARTITION__` dir. The reference is
     * stricter-but-worse here: its `JSON.parseObject` map throws on
     * malformed input and, with `noRestart` (App.txt:45), one poison
@@ -40,8 +44,7 @@ object CdcToOrcJob {
   def run(payloads: DataFrame, warehouse: String, table: String,
           checkpoint: String,
           trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
-    val cities = CdcIngest.parse(CdcIngest.goodRecords(payloads, "payload"), "payload")
-    OrcTableSink.streamWriter(cities, warehouse, table, "c_date", checkpoint)
+    OrcTableSink.streamWriter(cities(payloads), warehouse, table, "c_date", checkpoint)
       .trigger(trigger)
       .start()
   }

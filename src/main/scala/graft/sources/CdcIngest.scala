@@ -57,13 +57,22 @@ object CdcIngest {
     df.select(afterExpr(payloadCol).as("a"))
       .select(typedColumns: _*)
 
+  /** `parse(goodRecords(df, c), c)` with the envelope decoded once per
+    * row instead of twice. A filter on the decoded struct would not do:
+    * the optimizer pushes it back below the projection, re-decoding. So
+    * undecodable rows are dropped by exploding a zero-or-one-element
+    * array — a generator input the optimizer leaves in place. */
+  def parseGood(df: DataFrame, payloadCol: String): DataFrame =
+    df.select(explode(array_compact(array(afterExpr(payloadCol)))).as("a"))
+      .select(typedColumns: _*)
+
   /** Dead-letter filter for [[parse]]: the input rows whose envelope does
     * NOT decode — malformed JSON at either nesting level, a non-object
     * `value`, or a missing `after` — plus null payloads. `from_json`
     * nulls these out silently (its PERMISSIVE default, which [[parse]]
     * deliberately keeps: one poison record must not kill a 100 TB
     * ingest), so a production job splits the stream once:
-    * `parse(goodRecords(df, c), c)` to the warehouse,
+    * [[parseGood]]`(df, c)` to the warehouse,
     * `corruptRecords(df, c)` to a quarantine sink for replay. Rows
     * that decode but carry null
     * FIELDS (e.g. `after.ref: null`) are data, not corruption, and are
@@ -76,9 +85,8 @@ object CdcIngest {
   /** Exact complement of [[corruptRecords]]: the input rows whose
     * envelope decodes. The split is expressible only pre-[[parse]] —
     * parse output can't distinguish a corrupt row from a valid record
-    * whose `after` fields are all null — so a production job filters
-    * here first, then parses the survivors:
-    * `parse(goodRecords(df, "payload"), "payload")`. */
+    * whose `after` fields are all null — so the split happens here, or
+    * fused with the parse in [[parseGood]]. */
   def goodRecords(df: DataFrame, payloadCol: String): DataFrame =
     df.where(afterExpr(payloadCol).isNotNull)
 

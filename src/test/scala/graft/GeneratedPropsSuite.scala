@@ -450,6 +450,43 @@ class GeneratedPropsSuite extends AnyFunSuite {
     assert(out == rows.map(r => (r._1, r._2, r._3)).toSet)
   }
 
+  test("CDC parseGood ≡ parse(goodRecords) as a multiset on generated envelope mixes") {
+    // every class a CDC feed produces: good, mixed-case keys, a null or
+    // extra `after` field, truncated JSON, a non-object `value`, a
+    // missing `after`, garbage and a null payload
+    def q(s: String) = "\\\"" + s + "\\\""
+    def envelope(fields: Seq[(String, String)], keyCase: String => String): String = {
+      val after = fields.map { case (k, v) => s"${q(keyCase(k))}: $v" }.mkString(", ")
+      s"""{"${keyCase("value")}": "{${q(keyCase("after"))}: {$after}}"}"""
+    }
+    val genGood = for {
+      ref <- Gen.oneOf(Gen.choose(0L, Long.MaxValue / 2).map(_.toString), Gen.const("null"))
+      cid <- Gen.choose(0L, 1000L)
+      name <- Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.take(12).mkString)
+      ms <- Gen.choose(1_000_000_000_000L, 2_000_000_000_000L)
+      extra <- Gen.oneOf(Seq.empty, Seq("population" -> "24870000"))
+      upper <- Gen.oneOf(false, true)
+    } yield envelope(
+      Seq("ref" -> ref, "city_id" -> cid.toString, "city_name" -> q(name),
+        "c_time" -> ms.toString) ++ extra,
+      k => if (upper) k.toUpperCase else k)
+    val genPayload: Gen[String] = Gen.frequency(
+      6 -> genGood,
+      1 -> (for (g <- genGood; n <- Gen.choose(1, g.length - 1)) yield g.take(n)),
+      1 -> Gen.oneOf("""{"value": "42"}""", """{"value": "[1, 2]"}""",
+        """{"value": "\"s\""}"""),
+      1 -> Gen.const("""{"value": "{\"other\": 1}"}"""),
+      1 -> Gen.oneOf("not json at all", "", null))
+    val df = sampleN(genPayload, 600).toDF("payload")
+    def bag(d: org.apache.spark.sql.DataFrame) =
+      d.collect().toSeq.map(_.toString).groupBy(identity).view.mapValues(_.size).toMap
+    val good = bag(CdcIngest.parseGood(df, "payload"))
+    assert(good == bag(CdcIngest.parse(CdcIngest.goodRecords(df, "payload"), "payload")))
+    // the mix exercises both sides of the split
+    val nGood = good.values.sum
+    assert(nGood > 300 && nGood < 600, s"$nGood good rows")
+  }
+
   test("packSequences ≡ local sequential pack on generated token counts") {
     // random (id, nTokens) corpora incl. nt=1 and nt >> capacity;
     // property: the operator's window arithmetic equals a literal local

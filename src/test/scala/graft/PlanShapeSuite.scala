@@ -322,26 +322,41 @@ class PlanShapeSuite extends AnyFunSuite {
     assert(p.contains("WholeStageCodegen") || p.contains("*(1)"), p)
   }
 
-  test("CDC decode chain stays a codegen'd projection — no UDF in the ingest hot path") {
-    // from_json×2 + date math must compile into one WholeStageCodegen
-    // projection: at 100 TB the ingest path runs on every record, so a
-    // non-codegen expression (or an accidental UDF) here taxes the whole
-    // pipeline. Both the keep side and the dead-letter side are checked.
+  test("CDC decode runs once per row — no UDF, 2 from_json and 1 lower") {
+    // The ingest path runs on every record, so the decode chain (lower,
+    // from_json of the envelope, from_json of its double-encoded `value`)
+    // must be evaluated once per row and never through a UDF. Spark 4.1
+    // runs from_json outside WholeStageCodegen (its Filter/Project/Generate
+    // carry no codegen id), so the check is on the executed expressions:
+    // the job's parseGood decode and the dead-letter filter each hold ONE
+    // chain; parse(goodRecords(..)) would hold two (a filter on the decoded
+    // struct is pushed back below the projection and decodes again).
+    import graft.jobs.CdcToOrcJob
     import graft.sources.CdcIngest
+    import org.apache.spark.sql.catalyst.expressions.{Expression, JsonToStructs, Lower, ScalaUDF}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object aqe extends AdaptiveSparkPlanHelper
     // parquet-backed payloads: a literal local table would be constant-
-    // folded to a LocalTableScan, leaving nothing to assert codegen on
+    // folded to a LocalTableScan, leaving no decode in the plan
     val src = CdcIngest.toEnvelope(
       Tables.customer(spark, sfDir).limit(100).select(
         col("c_custkey").as("ref"), col("c_nationkey").as("city_id"),
         col("c_name").as("city_name"),
         (col("c_custkey") * 1000L + 1704067200000L).as("c_ms")), "c_ms")
-    for (df <- Seq(CdcIngest.parse(src, "payload"),
-                   CdcIngest.corruptRecords(src, "payload"))) {
+    def count(df: DataFrame)(pf: PartialFunction[Expression, Unit]): Int = {
       df.collect()
+      aqe.flatMap(df.queryExecution.executedPlan)(
+        _.expressions.flatMap(_.collect(pf))).size
+    }
+    for (df <- Seq(CdcToOrcJob.cities(src), CdcIngest.corruptRecords(src, "payload"))) {
       val p = plan(df)
-      assert(p.contains("WholeStageCodegen") || p.contains("*(1)"), p)
+      assert(count(df) { case _: JsonToStructs => } == 2, p)
+      assert(count(df) { case _: Lower => } == 1, p)
+      assert(count(df) { case _: ScalaUDF => } == 0, p)
       assert(!p.contains("BatchEvalPython") && !p.toLowerCase.contains("udf"), p)
     }
+    val twice = CdcIngest.parse(CdcIngest.goodRecords(src, "payload"), "payload")
+    assert(count(twice) { case _: JsonToStructs => } == 4, plan(twice))
   }
 
   test("L2: SimHash banded self-join computes the fingerprint map side once (AQE ReusedExchange)") {
