@@ -1,14 +1,28 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
+import scala.jdk.CollectionConverters._
 
 /** Bench harness (driver-run per round → BENCH_r{N}.json).
   *
-  * Times every `SparkEntry.queries` entry on SPARK_GRAFT_SF_DIR with full
-  * materialization via a `noop`-format write (a bare `count()` would let
-  * Catalyst prune computed columns and under-report). One untimed warmup
-  * pass absorbs JIT/classloading so the timed passes measure the engine,
-  * not the JVM. Prints exactly ONE JSON line.
+  * Times every [[Harness.entries]] entry on SPARK_GRAFT_SF_DIR, fully
+  * materialized by [[Harness.materialize]]. One untimed warmup pass
+  * absorbs JIT/classloading so the timed passes measure the engine, not
+  * the JVM. Prints exactly ONE JSON line on stdout.
+  *
+  * Filtered run: SPARK_GRAFT_BENCH_ONLY=<name>[,<name>…] (an unknown name
+  * fails the run) times just those entries — the tool for timing and
+  * profiling one entry under optimization. It never writes the detail
+  * file; its stdout line carries every per-entry median and min instead,
+  * and each timed pass prints one [[PassProfile]] JSON line to stderr:
+  *   {"pass":1,"entry":"q01","wall_ms":…,"gc_count":…,"gc_ms":…,
+  *    "jit_ms":…,"codecache_mb":…,"stages":{"s7":{"wall_ms":…,
+  *    "max_task_ms":…,"max_task_cpu_ms":…,"max_task_gc_ms":…,"tasks":…}}}
+  * The unfiltered (driver) run attaches no listener.
   *
   * Noise policy: SPARK_GRAFT_SAMPLES (default 3) timed passes run
   * round-robin — pass 1 of EVERY query, then pass 2 of every query, … —
@@ -42,31 +56,23 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark: SparkSession = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-bench"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val allQueries = SparkEntry.queries ++ SparkEntry.benchOnly
-    def materialize(name: String): Unit =
-      allQueries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-
     // optional comma-separated name filter for targeted local timing of
     // the entries under optimization; a filtered run is a dev tool, so
     // it must never overwrite the certifiable full-detail file
-    val onlyFilter = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = allQueries.keys.toSeq.sorted
-      .filter(n => onlyFilter.forall(_.contains(n)))
+    val allNames = Harness.entries.keys.toSeq.sorted
+    val names = Harness.select("SPARK_GRAFT_BENCH_ONLY", allNames)
+    val filtered = names.size < allNames.size
+    val cpus = Harness.cpus(32)
+    val spark = Engine.session("graft-bench", cpus)
+    def materialize(name: String): Unit = Harness.materialize(Harness.entries(name)(spark, sfDir))
     // untimed warmup: JIT, codegen cache, file-index warm
     names.foreach { n =>
       try materialize(n)
       catch { case e: Throwable => System.err.println(s"[bench] warmup $n: ${e.getMessage}") }
     }
     val samples = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SAMPLES", "3").toInt)
+    // only a filtered run pays for (and prints) the per-pass accounting
+    val profile = if (filtered) Some(new PassProfile(spark)) else None
     // interleaved passes: one full round-robin sweep per sample, so each
     // query's samples land in different load windows; any pass throwing
     // marks the query failed (a partial sample set could hide an
@@ -75,11 +81,14 @@ object Bench {
       scala.collection.mutable.Map.empty[String, Vector[Double]]
         .withDefaultValue(Vector.empty)
     val failedSet = scala.collection.mutable.LinkedHashSet.empty[String]
-    for (_ <- 0 until samples; n <- names if !failedSet.contains(n)) {
+    for (pass <- 1 to samples; n <- names if !failedSet.contains(n)) {
       try {
+        profile.foreach(_.start())
         val t0 = System.nanoTime()
         materialize(n)
-        timesByQuery(n) = timesByQuery(n) :+ (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
+        profile.foreach(_.report(pass, n, wall))
+        timesByQuery(n) = timesByQuery(n) :+ wall
       } catch { case e: Throwable =>
         System.err.println(s"[bench] FAILED $n: ${e.getMessage}")
         failedSet += n
@@ -218,7 +227,7 @@ object Bench {
     // ~2000 chars of stdout, and with 100+ entries the one-line-per-contract
     // JSON is ~5 KB — rounds 1-6 all came back `parsed: null` because the
     // line's head (metric/value/queries) fell off the capture window.
-    if (onlyFilter.isEmpty)
+    if (!filtered)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(detailPath),
         (fullLine + "\n").getBytes("UTF-8"))
@@ -237,7 +246,7 @@ object Bench {
     // a filtered dev run has no detail file — put the full per-entry
     // numbers on stdout instead (the capture-window concern only applies
     // to the driver's unfiltered runs)
-    if (onlyFilter.isDefined) println(fullLine)
+    if (filtered) println(fullLine)
     else println(f"""{"metric":"total","value":$total%.3f,"unit":"sec",$envJson,"queries":$coreQs,"x_total":$xTotal%.3f,"x_count":${xEntries.size},"failed":$failedJson,"regressions":$regJson,$certJson,"detail":"$detailPath","sf":"$sfDir"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
@@ -265,5 +274,60 @@ object Bench {
       entry.findAllMatchIn(scoped.drop(1).take(end + 1))
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
+  }
+}
+
+/** A filtered [[Bench]] run's per-pass accounting: JVM GC, JIT and
+  * code-cache deltas plus per-stage wall, slowest task (its CPU and GC)
+  * and task count. A slow pass whose GC or JIT delta tracks its wall is
+  * the entry's own allocation pressure or recompile churn; one whose
+  * stage walls stay flat lost its time on the driver between stages
+  * (planning, commit) or to co-tenant load. */
+private final class PassProfile(spark: SparkSession) extends SparkListener {
+  private val stages = new ConcurrentLinkedQueue[String]()
+  // per stage: (duration, CPU, GC) ms of its slowest task
+  private val slowest = new ConcurrentHashMap[Int, (Long, Long, Long)]()
+  private var gc0, gcMs0, jit0 = 0L
+  spark.sparkContext.addSparkListener(this)
+
+  override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
+    val m = Option(te.taskMetrics)
+    slowest.merge(te.stageId,
+      (te.taskInfo.duration, m.fold(-1L)(_.executorCpuTime / 1000000L), m.fold(-1L)(_.jvmGCTime)),
+      (a, b) => if (a._1 >= b._1) a else b)
+  }
+
+  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+    val si = sc.stageInfo
+    val wall = (for (s <- si.submissionTime; e <- si.completionTime) yield e - s).getOrElse(-1L)
+    val (task, cpu, gc) = slowest.getOrDefault(si.stageId, (-1L, -1L, -1L))
+    stages.add(s""""s${si.stageId}":{"wall_ms":$wall,"max_task_ms":$task,""" +
+      s""""max_task_cpu_ms":$cpu,"max_task_gc_ms":$gc,"tasks":${si.numTasks}}""")
+  }
+
+  private def gcTotals: (Long, Long) = {
+    val beans = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    (beans.map(_.getCollectionCount).sum, beans.map(_.getCollectionTime).sum)
+  }
+  private def jitMs: Long = ManagementFactory.getCompilationMXBean.getTotalCompilationTime
+
+  def start(): Unit = {
+    stages.clear()
+    slowest.clear() // stale maxima would leak into this pass's stages
+    val (c, t) = gcTotals
+    gc0 = c; gcMs0 = t; jit0 = jitMs
+  }
+
+  /** Prints the pass started by [[start]] as one stderr JSON line. */
+  def report(pass: Int, entry: String, wallSec: Double): Unit = {
+    val (c, t) = gcTotals
+    val jit = jitMs - jit0
+    // every stage-completed event must land before the stages are read
+    ListenerBridge.drain(spark.sparkContext)
+    val codeCacheMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName.startsWith("CodeHeap")).map(_.getUsage.getUsed).sum / 1048576.0
+    System.err.println(f"""{"pass":$pass,"entry":"$entry","wall_ms":${wallSec * 1e3}%.1f,""" +
+      s""""gc_count":${c - gc0},"gc_ms":${t - gcMs0},"jit_ms":$jit,""" +
+      f""""codecache_mb":$codeCacheMb%.1f,"stages":{${stages.asScala.mkString(",")}}}""")
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Configs shared by every entry point (Verify/Bench/tests). */
+  /** Configs shared by every session: [[session]]'s and the tests'. */
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
     b.config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -49,9 +49,7 @@ object Engine {
       // zero GC on the interpretation-heavy entries; BASELINE.md q48
       // root-cause). 1024 × ~100 KB generated classes ≈ 100 MB driver
       // metaspace at worst — cheap insurance for any multi-tenant driver.
-      // (env override exists for A/B-measuring the eviction effect only)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "1024"))
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
       // NOTE on parquet timestamps: Spark's INT96 default carries no
       // usable min/max stats, so time predicates prune ZERO row groups.
       // A production deployment should pin outputTimestampType =
@@ -69,6 +67,8 @@ object Engine {
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
+  /** The one session builder of `src/main` (HarnessSuite enforces it):
+    * `local[cores]` with `cores` shuffle partitions and WARN logging. */
   def session(appName: String = "graft", cores: Int = 32): SparkSession = {
     val s = configure(
       SparkSession.builder().master(s"local[$cores]").appName(appName),

@@ -617,26 +617,12 @@ object ScaleSmoke {
     // the pagerank extraction joins by copies
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       s"/tmp/graft_scale_v3_${baseTag}_${copies}x")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]").appName("graft-scale-smoke"),
-      shufflePartitions = cpus
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // optional filter (comma-separated names): e.g. exclude the
     // by-semantics-quadratic x_embed_neardup when pushing to 30x+, where
     // its exact all-pairs work would dominate the whole run
-    val selected = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-      .map { keep =>
-        val unknown = keep -- targets.map(_._1).toSet
-        require(unknown.isEmpty, // a typo must not silently shrink coverage
-          s"SPARK_GRAFT_SCALE_QUERIES names no target: ${unknown.mkString(", ")} " +
-            s"(known: ${targets.map(_._1).mkString(", ")})")
-        targets.filter(t => keep(t._1))
-      }
-      .getOrElse(targets)
+    val keep = Harness.select("SPARK_GRAFT_SCALE_QUERIES", targets.map(_._1)).toSet
+    val selected = targets.filter(t => keep(t._1))
+    val spark = Engine.session("graft-scale-smoke", Harness.cpus(32))
     val tables = selected.flatMap(_._2).distinct
     buildReplica(spark, baseDir, scaleDir, tables, copies)
 
@@ -644,8 +630,7 @@ object ScaleSmoke {
     def timeIt(name: String, dir: String, samples: Int): Double =
       (0 until samples).map { _ =>
         val t0 = System.nanoTime()
-        planOf(name)(spark, dir)
-          .write.mode("overwrite").format("noop").save()
+        Harness.materialize(planOf(name)(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }.min
 

@@ -1,31 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Engine.configure: same pinned conf set as Bench/tests (AQE, UTC, …)
-    // so the t2 run exercises the engine's real configuration.
-    val spark = Engine.configure(
-      SparkSession.builder().master(s"local[$cpus]"),
-      shufflePartitions = cpus.toInt
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.queries
+    // optional comma-separated name filter for targeted local re-proof
+    // of entries under change; the driver's gate runs unfiltered.
+    val names = Harness.select("SPARK_GRAFT_VERIFY_ONLY", queries.keys.toSeq.sorted)
+    // the engine's real configuration (AQE, UTC, …), as Bench and tests use
+    val spark = Engine.session("graft-verify", Harness.cpus(4))
     // data-dependent oracles (x_ivf_topk's trained centroids) must be
     // generated against the same sfDir the driver's DuckDB will read
     sys.props("graft.oracle.sfDir") = sfDir
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for targeted local re-proof
-    // of entries under change; the driver's gate runs unfiltered.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

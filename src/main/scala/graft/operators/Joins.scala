@@ -55,10 +55,8 @@ object Joins {
     * or wide node (join, aggregate, window, sort, distinct/dedup,
     * repartition, limit) the helper returns the frame unchanged — such a
     * plan already has a partitioning decided by its own operators, and
-    * the probe would be both unsafe and pointless. Env kill-switch for
-    * A/B measurement only. */
+    * the probe would be both unsafe and pointless. */
   def fanOutForCompute(df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_FANOUT").contains("off")) return df
     import org.apache.spark.sql.catalyst.plans.{logical => lp}
     val wide = df.queryExecution.analyzed.exists {
       case _: lp.Join | _: lp.Aggregate | _: lp.Window | _: lp.Sort |

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print `.explain("formatted")` for one
-  * `SparkEntry.queries` entry — the fast path for the "is this the plan
-  * you'd want at 100 TB" audit (pushdown reached the scan? broadcast
+  * [[graft.Harness.entries]] entry — the fast path for the "is this the
+  * plan you'd want at 100 TB" audit (pushdown reached the scan? broadcast
   * where expected? whole-stage codegen spans wide?).
   *
   * Usage: sbt "runMain graft.tools.ExplainOne q48_map_fns2 [sfDir]"
@@ -14,12 +12,10 @@ object ExplainOne {
     val name = args.headOption.getOrElse("q48_map_fns2")
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val spark: SparkSession = graft.Engine.configure(
-      SparkSession.builder().master("local[4]").appName("graft-explain"),
-      shufflePartitions = 4).getOrCreate()
+    val plan = graft.Harness.entries(name)
+    val spark = graft.Engine.session("graft-explain", graft.Harness.cpus(4))
     spark.sparkContext.setLogLevel("ERROR")
-    (graft.SparkEntry.queries ++ graft.SparkEntry.benchOnly)(name)(spark, sfDir)
-      .explain("formatted")
+    plan(spark, sfDir).explain("formatted")
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.SparkContext
 
 /** Deterministic listener-event drain: `SparkContext.listenerBus` went
   * `private[spark]`, so tooling that reads its own SparkListener state
-  * after a job (e.g. [[graft.tools.ProfileOne]]'s per-pass stage stats)
+  * after a job (e.g. a filtered [[graft.Bench]] run's per-pass stage stats)
   * can't flush the bus without a racy sleep. Same extension seam as
   * [[ColumnBridge]]/[[SessionBridge]]: reached from inside the
   * org.apache.spark package namespace. */
