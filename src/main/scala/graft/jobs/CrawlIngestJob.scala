@@ -29,8 +29,10 @@ import graft.sources.CorpusExport
   * never shuffle) and appends exactly its novel survivors.
   *
   * Exactly-once: foreachBatch is at-least-once, and the export's
-  * dynamic partition overwrite on (split, gen = batchId) makes a
-  * replayed batch atomically replace exactly its own partitions — the
+  * generation-commit protocol ([[CorpusExport.appendGeneration]]) on
+  * gen = batchId makes a replayed batch replace exactly its own
+  * generation — written to a per-application staging dir and swapped
+  * in whole, so no crashed attempt's output survives or merges in — the
   * CdcToOrcJob / DriftMonitorJob idempotency contract. Crucially the
   * seen-side read EXCLUDES the current batch's own generation: a
   * replayed batch would otherwise see its crashed predecessor's rows

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.operators.{Joins, Pipelines}
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sharded corpus export — the delivery artifact a training run mounts:
@@ -79,28 +81,8 @@ object CorpusExport {
     // 100 TB corpus in executor storage to save re-deriving an md5
     // nibble would be the real scale bug.
     val labeled = Pipelines.splitByMd5Prefix(df, idCol, cuts)
-    // probe dir is applicationId-keyed: two concurrent exports sharing
-    // an outDir would otherwise clobber each other's probe data and
-    // skew or fail the sizing (readers never see it — underscore name)
-    val bytesPerRow = estimateBytesPerRow(labeled, sampleRows, format,
-      s"$outDir/_probe_${spark.sparkContext.applicationId}", codec)
-    val rowsPerShard = math.max(1L, (targetShardBytes / bytesPerRow).toLong)
-    val splitCounts = labeled.groupBy("split").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val shardsPerSplit = splitCounts.map { case (s, n) =>
-      s -> math.max(1L, (n + rowsPerShard - 1L) / rowsPerShard)
-    }
-    val kExpr = shardsPerSplit.foldLeft(lit(1L)) { case (els, (s, k)) =>
-      when(col("split") === s, lit(k)).otherwise(els)
-    }
-    val totalShards = math.max(1L, shardsPerSplit.values.sum).toInt
-    val writer = labeled
-      .withColumn("__shard", pmod(xxhash64(col(idCol)), kExpr))
-      .repartition(totalShards, col("split"), col("__shard"))
-      .drop("__shard")
-      .write.format(format).mode("overwrite").partitionBy("split")
-      .option("maxRecordsPerFile", rowsPerShard)
-    codec.fold(writer)(c => writer.option("compression", c)).save(outDir)
+    shardWriter(labeled, idCol, outDir, format, targetShardBytes,
+      sampleRows, codec).mode("overwrite").partitionBy("split").save(outDir)
     // read back under the WRITTEN schema, never inference: a JSON
     // read-back of a numeric-looking string column would otherwise
     // infer bigint and re-stringify differently ('007' → '7'),
@@ -114,29 +96,16 @@ object CorpusExport {
 
   /** Incremental (generation-partitioned) corpus export — the recurring
     * crawl's delivery path: each call lands ONLY the new generation's
-    * shards under `split=…/gen=N/` (dynamic partition overwrite, so a
-    * replayed generation atomically replaces exactly its own partitions
-    * — the bpeSave version contract) and UNIONS the manifest instead of
+    * shards under `split=…/gen=N/` and UNIONS the manifest instead of
     * rewriting the world. A monthly 1 PB corpus with a 10 TB delta
-    * writes 10 TB, not 1 PB.
+    * writes 10 TB, not 1 PB. Guards, replay rule and commit are the
+    * one generation-commit protocol, [[appendGeneration]].
     *
     * Manifest contract: same per-shard columns as [[exportShards]] plus
     * (gen, shard_id). Checksums come from the COMMITTED files of the
     * new generation only (read back under the written schema); prior
     * generations' rows carry over untouched — they were derived from
-    * their own committed files at their own append time. `shard_id` is
-    * globally monotone: prior max + dense row_number over the new
-    * generation's (split, shard_path) — ids never reuse, so trainer
-    * resume offsets stay valid across appends.
-    *
-    * Replay rule: NEW generations must land in increasing order, but
-    * re-running any EXISTING generation is idempotent (its data
-    * partitions and manifest rows are replaced; ids re-derive from the
-    * generations below it, which a same-data replay reproduces
-    * exactly — the at-least-once contract a fresh-checkpoint stream
-    * replay needs). Only inserting a NEW generation below
-    * already-landed ones is refused loudly — that would re-number
-    * history under a mounted trainer. */
+    * their own committed files at their own append time. */
   def exportShardsIncremental(delta: DataFrame, idCol: String,
                               contentCols: Seq[String],
                               outDir: String, generation: Long,
@@ -152,130 +121,114 @@ object CorpusExport {
     Joins.requireFreeColumns("exportShardsIncremental", delta.columns,
       "split", "gen", "__shard", "__h", "__hl")
     val spark = delta.sparkSession
-    // the order guard runs BEFORE any data write: a refused generation
-    // must leave the corpus dir untouched (a post-write throw would
-    // orphan shards no manifest row covers — phantom rows for every
-    // reader of outDir)
-    val manifestPath = s"$outDir/_manifest"
+    val labeled = Pipelines.splitByMd5Prefix(delta, idCol, cuts)
+      .withColumn("gen", lit(generation))
+    appendGeneration("exportShardsIncremental", spark, outDir, generation,
+        shardGlob = "part-*")(
+      root => shardWriter(labeled, idCol, outDir, format, targetShardBytes,
+        sampleRows, codec).mode("append").partitionBy("split", "gen")
+        .save(root),
+      () => buildManifest(spark.read.format(format).schema(labeled.schema)
+        .load(outDir).where(col("gen") === generation),
+        contentCols, outDir, partDepth = 2))
+  }
+
+  /** The generation-commit protocol of both incremental exports
+    * ([[exportShardsIncremental]] and
+    * [[WebDataset.exportWebDatasetIncremental]]) — the reference's
+    * commit-exactly-once job (tmp → pending → final, SURVEY §3.3) for
+    * the trainer corpus, written once. `write(root)` lands generation
+    * G's shards under `root/split=…/gen=G/`, `shardGlob` matches one
+    * shard file there, and `manifest()` builds the committed
+    * generation's per-shard rows from `outDir`.
+    *
+    *  1. Guards, before any write: data without a manifest
+    *     ([[checkDataWithoutManifest]]), and a NEW generation below
+    *     already-landed ones — that would re-number history under a
+    *     mounted trainer. Re-running an EXISTING generation is legal
+    *     (the at-least-once contract a fresh-checkpoint stream replay
+    *     needs).
+    *  2. Replay rule, one path for new and landed generations: G is
+    *     written to `_gen_staging_<appId>` and swapped in whole — every
+    *     live `split=…/gen=G` dir is deleted, the staged ones renamed
+    *     in. A refused write (a key audit, a shard-count mismatch) thus
+    *     leaves the landed generation untouched; a replay that no
+    *     longer reaches a split drops that split's stale shards; and a
+    *     crashed attempt's leftovers — its `split=…/gen=G` files, and
+    *     the committed task output Spark's committer keeps under the
+    *     job dir of whatever path it wrote — never merge in, since the
+    *     staging dir (the committer's output path) is per application.
+    *     When later generations exist, the staged shard count must
+    *     equal the manifest's, since their ids sit right above G's. A
+    *     crash mid-swap self-heals on the same replay: the manifest
+    *     still holds, so the check re-passes and the swap re-runs. A
+    *     JVM crash leaves its `_gen_staging_<appId>` behind: readers
+    *     never see it (underscore name), nothing sweeps it, and it can
+    *     hold a whole generation's bytes.
+    *  3. `shard_id` is globally monotone: the max id below G plus a
+    *     dense row number over G's (split, shard_path). Ids never
+    *     reuse, so trainer resume offsets stay valid across appends,
+    *     and a same-data replay re-derives G's ids exactly.
+    *  4. The manifest union lands complete at `_manifest_staging`,
+    *     then swaps in by delete + rename. An in-place overwrite would
+    *     truncate `_manifest` first, and a crash there would erase
+    *     every prior generation's rows; a crash between the delete and
+    *     the rename leaves data without a manifest, which guard 1
+    *     refuses with the recovery hint. */
+  private[graft] def appendGeneration(op: String, spark: SparkSession,
+                                      outDir: String, generation: Long,
+                                      shardGlob: String)(
+      write: String => Unit, manifest: () => DataFrame): DataFrame = {
     // all probes resolve through the Hadoop FileSystem of outDir — a
     // java.io.File probe on an hdfs://|s3a:// dir would silently read
     // empty and drop every prior generation from the manifest
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasPrior =
-      listDataFiles(fs, new org.apache.hadoop.fs.Path(manifestPath)).nonEmpty
-    // a data dir with NO manifest is one of three states, two refused:
-    // (a) a crashed manifest COMMIT — the full union still lives at
-    //     _manifest_staging; refuse with the rename-recovery hint
-    //     (rebuilding would orphan every prior generation as phantom
-    //     rows and restart shard_id under a mounted trainer);
-    // (b) data for OTHER generations with neither manifest nor staging
-    //     — a foreign dir or a truly lost manifest; refuse loudly;
-    // (c) data for exactly THIS generation — a crashed FIRST append
-    //     (later appends never remove _manifest while data stands
-    //     except inside the staged swap, which leaves staging), whose
-    //     replay must proceed: dynamic overwrite replaces its own
-    //     partitions wholesale and the manifest rebuilds from scratch.
-    checkDataWithoutManifest("exportShardsIncremental", fs, outDir,
-      hasPrior, generation)
-    // prior rows materialize NOW; the manifest overwrite below reads
-    // from the same path; the table is metadata-sized (row per shard)
+    val fs = new Path(outDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val manifestPath = s"$outDir/_manifest"
+    val hasPrior = listDataFiles(fs, new Path(manifestPath)).nonEmpty
+    checkDataWithoutManifest(op, fs, outDir, hasPrior, generation)
+    // prior rows materialize NOW: the commit below replaces the path
+    // they are read from; the table is metadata-sized (row per shard)
     val allPrior: Option[DataFrame] =
       if (hasPrior) Some(spark.read.parquet(manifestPath).localCheckpoint())
       else None
-    // replaying an EXISTING generation is legal and idempotent (the
-    // at-least-once contract: a fresh-checkpoint stream replay re-lands
-    // every batch; ids re-derive from the generations BELOW it, which a
-    // same-data replay reproduces exactly). Only a NEW generation
-    // inserted below already-landed ones is refused — that renumbers
-    // history under a mounted trainer.
     val allGens = allPrior.map(_.select(col("gen")).distinct()
       .collect().map(_.getLong(0)).toSet).getOrElse(Set.empty[Long])
     require(allGens.forall(_ < generation) || allGens(generation),
-      s"exportShardsIncremental: generation $generation would be a NEW " +
-        s"generation below already-landed ones at $outDir — appending " +
-        "out of order would re-number history under a mounted trainer")
-    val labeled = Pipelines.splitByMd5Prefix(delta, idCol, cuts)
-      .withColumn("gen", lit(generation))
-    val bytesPerRow = estimateBytesPerRow(labeled, sampleRows, format,
-      s"$outDir/_probe_${spark.sparkContext.applicationId}", codec)
-    val rowsPerShard = math.max(1L, (targetShardBytes / bytesPerRow).toLong)
-    val splitCounts = labeled.groupBy("split").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val shardsPerSplit = splitCounts.map { case (s, n) =>
-      s -> math.max(1L, (n + rowsPerShard - 1L) / rowsPerShard)
-    }
-    val kExpr = shardsPerSplit.foldLeft(lit(1L)) { case (els, (s, k)) =>
-      when(col("split") === s, lit(k)).otherwise(els)
-    }
-    val totalShards = math.max(1L, shardsPerSplit.values.sum).toInt
-    val routed = labeled
-      .withColumn("__shard", pmod(xxhash64(col(idCol)), kExpr))
-      .repartition(totalShards, col("split"), col("__shard"))
-      .drop("__shard")
-    if (allGens.exists(_ > generation)) {
-      // Replaying a generation BELOW already-landed ones: its re-derived
-      // shard ids must not collide with, or gap against, later
-      // generations' — so its shard COUNT must reproduce the manifest's,
-      // and that must be known BEFORE the generation's live partitions
-      // are touched (a post-write refusal would leave data ≠ manifest
-      // and demand a manual same-data re-run to restore consistency).
-      // The file count is not derivable up front (reducer collisions
-      // shift maxRecordsPerFile roll boundaries), so the write STAGES
-      // under an app-keyed underscore dir, the count checks against the
-      // untouched manifest, and only a match swaps the partition dirs
-      // in. On refusal the corpus dir is untouched; a crash mid-swap
-      // self-heals on the same-append replay (the manifest still holds,
-      // so the count re-passes and the swap re-runs over every split).
-      val staging =
-        s"$outDir/_gen_staging_${spark.sparkContext.applicationId}"
-      val stagingP = new org.apache.hadoop.fs.Path(staging)
-      try {
-        val w = routed.write.format(format).mode("overwrite")
-          .partitionBy("split", "gen")
-          .option("maxRecordsPerFile", rowsPerShard)
-        codec.fold(w)(c => w.option("compression", c)).save(staging)
-        val newN = listDataFiles(fs, stagingP).size.toLong
+      s"$op: generation $generation would be a NEW generation below " +
+        s"already-landed ones at $outDir — appending out of order would " +
+        "re-number history under a mounted trainer")
+    def genDirs(root: String) = glob(fs, s"$root/split=*/gen=$generation")
+    def shards(root: String) =
+      glob(fs, s"$root/split=*/gen=$generation/$shardGlob").length.toLong
+    val staging = s"$outDir/_gen_staging_${spark.sparkContext.applicationId}"
+    try {
+      write(staging)
+      // a later generation implies G is landed (the guard above)
+      if (allGens.exists(_ > generation)) {
+        val newN = shards(staging)
         val oldN = allPrior.get.where(col("gen") === generation).count()
         require(newN == oldN,
-          s"exportShardsIncremental: replaying NON-latest generation " +
-            s"$generation produced $newN shards where the manifest holds " +
-            s"$oldN — the re-derived shard ids would collide with or gap " +
-            "against later generations'; only a same-data (same shard " +
-            "count) replay of a non-latest generation is legal. The " +
-            "corpus dir is UNTOUCHED (the mismatch was caught at the " +
-            "staging step, before any live partition was replaced)")
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$outDir/split=*/gen=$generation")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .foreach(st => fs.delete(st.getPath, true))
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$staging/split=*/gen=$generation")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .foreach { st =>
-            val dest = new org.apache.hadoop.fs.Path(new org.apache.hadoop
-              .fs.Path(outDir, st.getPath.getParent.getName),
-              st.getPath.getName)
-            fs.mkdirs(dest.getParent)
-            require(fs.rename(st.getPath, dest),
-              s"exportShardsIncremental: swap rename ${st.getPath} -> " +
-                s"$dest failed")
-          }
-      } finally { fs.delete(stagingP, true); () }
-    } else {
-      val writer = routed
-        .write.format(format).mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split", "gen")
-        .option("maxRecordsPerFile", rowsPerShard)
-      codec.fold(writer)(c => writer.option("compression", c)).save(outDir)
-    }
-    // manifest rows for THIS generation only, from its committed files
-    val genManifest = buildManifest(
-      spark.read.format(format).schema(labeled.schema).load(outDir)
-        .where(col("gen") === generation),
-      contentCols, outDir, partDepth = 2)
-      .withColumn("gen", lit(generation))
+          s"$op: replaying NON-latest generation $generation produced " +
+            s"$newN shards where the manifest holds $oldN — the " +
+            "re-derived shard ids would collide with or gap against " +
+            "later generations'; only a same-data (same shard count) " +
+            "replay of a non-latest generation is legal. The corpus " +
+            "dir is UNTOUCHED (the mismatch was caught at the staging " +
+            "step, before any live partition was replaced)")
+      }
+      genDirs(outDir).foreach(st => fs.delete(st.getPath, true))
+      genDirs(staging).foreach { st =>
+        val dest = new Path(new Path(outDir, st.getPath.getParent.getName),
+          st.getPath.getName)
+        fs.mkdirs(dest.getParent)
+        require(fs.rename(st.getPath, dest),
+          s"$op: swap rename ${st.getPath} -> $dest failed")
+      }
+    } finally { fs.delete(new Path(staging), true); () }
+    val genManifest =
+      (if (shards(outDir) > 0) manifest() else emptyManifest(spark))
+        .withColumn("gen", lit(generation))
     val prior = allPrior
       .getOrElse(genManifest.withColumn("shard_id", lit(0L)).limit(0))
       .where(col("gen") =!= generation)
@@ -287,24 +240,63 @@ object CorpusExport {
     val fresh = genManifest.withColumn("shard_id",
       lit(maxId) + row_number().over(org.apache.spark.sql.expressions
         .Window.orderBy(col("split"), col("shard_path"))).cast("long"))
-    // (the NON-latest-replay shard-count guard ran pre-swap above, on
-    // the staged files, so a refusal leaves data ≡ manifest)
-    // atomic-ish manifest commit: the union lands complete at a staging
-    // path first, then swaps in via delete + rename — an in-place
-    // overwrite would truncate _manifest before rewriting it, and a
-    // crash in that window silently erases every prior generation's
-    // rows (the next append would see hasPrior=false). A crash between
-    // the delete and the rename leaves _manifest absent WITH data
-    // present, which the entry guard above refuses loudly and the
-    // staging dir recovers.
-    val stagingPath = new org.apache.hadoop.fs.Path(s"$outDir/_manifest_staging")
-    val manifestP = new org.apache.hadoop.fs.Path(manifestPath)
+    val stagingPath = new Path(s"$outDir/_manifest_staging")
+    val manifestP = new Path(manifestPath)
     prior.unionByName(fresh.select(prior.columns.map(col): _*))
       .write.mode("overwrite").parquet(stagingPath.toString)
     if (fs.exists(manifestP)) fs.delete(manifestP, true)
     require(fs.rename(stagingPath, manifestP),
-      s"exportShardsIncremental: rename $stagingPath -> $manifestP failed")
+      s"$op: rename $stagingPath -> $manifestP failed")
     spark.read.parquet(manifestPath)
+  }
+
+  /** The manifest of a generation that landed no shards. */
+  private[graft] def emptyManifest(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(String, String, Long, Long, String, Long)]
+      .toDF("split", "shard_path", "rows", "bytes",
+        "content_md5", "content_xor")
+  }
+
+  /** Shards per split, ceil(rows / rowsPerShard) and at least one, with
+    * the per-row shard count as a column expression (`kExpr`) and the
+    * total — the shard plan both corpus exports and the WebDataset
+    * exports route by. */
+  private[graft] def shardPlan(splitCounts: Map[String, Long],
+                               rowsPerShard: Long)
+      : (Map[String, Long], Column, Int) = {
+    val perSplit = splitCounts.map { case (s, n) =>
+      s -> math.max(1L, (n + rowsPerShard - 1L) / rowsPerShard)
+    }
+    val kExpr = perSplit.foldLeft(lit(1L)) { case (els, (s, k)) =>
+      when(col("split") === s, lit(k)).otherwise(els)
+    }
+    (perSplit, kExpr, math.max(1L, perSplit.values.sum).toInt)
+  }
+
+  /** Probe → size → route, shared by both corpus exports: encoded bytes
+    * per row from a probe under `outDir` (applicationId-keyed: two
+    * concurrent exports sharing an outDir would otherwise clobber each
+    * other's probe data and skew or fail the sizing; readers never see
+    * it — underscore name), then rows routed to [[shardPlan]]'s shards.
+    * Returns the writer with format, roll ceiling and codec set. */
+  private def shardWriter(labeled: DataFrame, idCol: String,
+                          outDir: String, format: String,
+                          targetShardBytes: Long, sampleRows: Int,
+                          codec: Option[String]): DataFrameWriter[Row] = {
+    val bytesPerRow = estimateBytesPerRow(labeled, sampleRows, format,
+      s"$outDir/_probe_${labeled.sparkSession.sparkContext.applicationId}",
+      codec)
+    val rowsPerShard = math.max(1L, (targetShardBytes / bytesPerRow).toLong)
+    val splitCounts = labeled.groupBy("split").agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val (_, kExpr, totalShards) = shardPlan(splitCounts, rowsPerShard)
+    val w = labeled
+      .withColumn("__shard", pmod(xxhash64(col(idCol)), kExpr))
+      .repartition(totalShards, col("split"), col("__shard"))
+      .drop("__shard")
+      .write.format(format).option("maxRecordsPerFile", rowsPerShard)
+    codec.fold(w)(c => w.option("compression", c))
   }
 
   /** One manifest row per written shard file. Separate so audits can
@@ -336,9 +328,9 @@ object CorpusExport {
     // Listing goes through the Hadoop FileSystem of outDir so it
     // resolves file://, hdfs://, and s3a:// alike.
     val spark = written.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fileBytes = listDataFiles(fs, new org.apache.hadoop.fs.Path(outDir))
+    val fs = new Path(outDir).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val fileBytes = listDataFiles(fs, new Path(outDir))
     import spark.implicits._
     val relOf = regexp_extract(col("shard_path"),
       s"(?:[^/]+/){$partDepth}[^/]+$$", 0)
@@ -350,29 +342,29 @@ object CorpusExport {
         col("content_md5"), col("content_xor"))
   }
 
-  /** The data-without-manifest triage shared by the parquet/JSONL and
-    * WebDataset incremental exports (the three-state contract in
-    * [[exportShardsIncremental]]'s comment): refuse a crashed manifest
-    * commit with the `_manifest_staging` recovery hint, refuse foreign
-    * or manifest-lost generation data, and let exactly the replay of a
-    * crashed FIRST append (all existing gen dirs == this generation)
-    * proceed to self-heal. */
+  /** The data-without-manifest triage of [[appendGeneration]]. A data
+    * dir with NO manifest is one of three states, two refused:
+    *  (a) a crashed manifest COMMIT — the full union still lives at
+    *      `_manifest_staging`; refuse with the rename-recovery hint
+    *      (rebuilding would orphan every prior generation as phantom
+    *      rows and restart shard_id under a mounted trainer);
+    *  (b) data for OTHER generations with neither manifest nor staging
+    *      — a foreign dir or a truly lost manifest; refuse loudly;
+    *  (c) data for exactly THIS generation — a crashed FIRST append
+    *      (later appends never remove `_manifest` while data stands
+    *      except inside the manifest swap, which leaves staging),
+    *      whose replay proceeds: its swap replaces its own leftovers
+    *      and the manifest rebuilds from scratch. */
   private[graft] def checkDataWithoutManifest(
-      op: String, fs: org.apache.hadoop.fs.FileSystem, outDir: String,
-      hasPrior: Boolean, generation: Long): Unit = {
-    val hasData = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$outDir/split=*")))
-      .exists(_.nonEmpty)
-    if (!hasPrior && hasData) {
-      require(!fs.exists(
-          new org.apache.hadoop.fs.Path(s"$outDir/_manifest_staging")),
+      op: String, fs: FileSystem, outDir: String,
+      hasPrior: Boolean, generation: Long): Unit =
+    if (!hasPrior && glob(fs, s"$outDir/split=*").nonEmpty) {
+      require(!fs.exists(new Path(s"$outDir/_manifest_staging")),
         s"$op: $outDir holds split=* data partitions but no _manifest — " +
           "a crashed manifest commit leaves the full union at " +
           "_manifest_staging (rename it back to _manifest); refusing to " +
           "rebuild a manifest that would orphan prior generations")
-      val strays = Option(fs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$outDir/split=*/gen=*")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+      val strays = glob(fs, s"$outDir/split=*/gen=*")
         .map(_.getPath.getName).distinct
         .filter(_ != s"gen=$generation")
       require(strays.isEmpty,
@@ -382,15 +374,17 @@ object CorpusExport {
           s"of generation $generation; refusing to rebuild a manifest " +
           "that would orphan that data")
     }
-  }
+
+  /** `pattern`'s matches through `fs`; empty (never null) on no match. */
+  private[graft] def glob(fs: FileSystem, pattern: String): Array[FileStatus] =
+    Option(fs.globStatus(new Path(pattern))).getOrElse(Array.empty)
 
   /** Recursive data-file listing (underscore/dot names pruned) through
     * the Hadoop FileSystem API — works for file://, hdfs://, s3a://
     * and bare local paths alike, and returns the empty listing (never
     * null, never a throw) when `dir` does not exist. Yields
     * (dir-relative path with '/' separators, bytes) per file. */
-  private[graft] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                                   dir: org.apache.hadoop.fs.Path,
+  private[graft] def listDataFiles(fs: FileSystem, dir: Path,
                                    prefix: String = ""): Seq[(String, Long)] =
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
@@ -417,7 +411,7 @@ object CorpusExport {
       : Double = {
     require(sampleRows > 0, "sampleRows must be positive")
     val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(probeDir)
+    val p = new Path(probeDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val probe = df.limit(sampleRows).coalesce(1)

@@ -83,22 +83,20 @@ object WebDataset {
     val spark = df.sparkSession
     // overwrite semantics (the exportShards contract): stale shards
     // from a prior export of different cardinality must not linger
-    val rootPath = new org.apache.hadoop.fs.Path(outDir)
-    val rootFs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (rootFs.exists(rootPath))
-      rootFs.globStatus(new org.apache.hadoop.fs.Path(rootPath, "split=*"))
-        .foreach(st => rootFs.delete(st.getPath, true))
+    val rootFs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    CorpusExport.glob(rootFs, s"$outDir/split=*")
+      .foreach(st => rootFs.delete(st.getPath, true))
     val labeled = Pipelines.splitByMd5Prefix(df, idCol, cuts)
-    val binaryCols = writeTarShards(labeled, idCol, contentCols, outDir,
-      targetShardBytes, gen = None)
+    writeTarShards(labeled, idCol, contentCols, outDir, targetShardBytes,
+      gen = None)
     // an empty corpus writes no shards; the manifest must then be the
     // empty table, not a failing glob read
-    val hasShards = rootFs.exists(rootPath) &&
-      rootFs.globStatus(new org.apache.hadoop.fs.Path(rootPath,
-        "split=*/shard-*.tar")).nonEmpty
     val manifest =
-      if (hasShards) buildTarManifest(spark, outDir, contentCols, binaryCols)
-      else emptyManifest(spark)
+      if (CorpusExport.glob(rootFs, s"$outDir/split=*/shard-*.tar").nonEmpty)
+        buildTarManifest(spark, outDir, contentCols,
+          binaryColsOf(labeled, contentCols))
+      else CorpusExport.emptyManifest(spark)
     manifest.write.mode("overwrite").parquet(s"$outDir/_manifest")
     spark.read.parquet(s"$outDir/_manifest")
   }
@@ -106,14 +104,11 @@ object WebDataset {
   /** Incremental (generation-partitioned) WebDataset export — the
     * [[CorpusExport.exportShardsIncremental]] contract over tar shards:
     * each call lands ONLY the new generation's tars under
-    * `split=…/gen=N/shard-NNNNNN.tar` (its own gen dirs are wiped
-    * first, so replaying an EXISTING generation is idempotent) and
-    * UNIONS the manifest under the same atomic staging commit, with
-    * the same guards: NEW generations land in increasing order only,
-    * and a data dir with no `_manifest` refuses loudly. Manifest rows
-    * carry (gen, shard_id) with shard_id globally monotone — trainer
-    * resume offsets never re-number. A trainer-side reader follows new
-    * generations live via [[readWebDatasetStream]]. */
+    * `split=…/gen=N/shard-NNNNNN.tar` and UNIONS the manifest, through
+    * the same generation-commit protocol
+    * ([[CorpusExport.appendGeneration]]: guards, replay rule, monotone
+    * `shard_id`, staged manifest commit). A trainer-side reader follows
+    * new generations live via [[readWebDatasetStream]]. */
   def exportWebDatasetIncremental(delta: DataFrame, idCol: String,
                                   contentCols: Seq[String],
                                   outDir: String, generation: Long,
@@ -132,138 +127,35 @@ object WebDataset {
       "split", "gen", "__shard", "__key", "__b", "__h", "__hl",
       "__gidx", "__tok")
     val spark = delta.sparkSession
-    val rootPath = new org.apache.hadoop.fs.Path(outDir)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifestPath = s"$outDir/_manifest"
-    // same crash-window triage as exportShardsIncremental: a crashed
-    // manifest COMMIT refuses with the _manifest_staging recovery
-    // hint, foreign/manifest-lost generation data refuses loudly, and
-    // a crashed FIRST append's replay proceeds to self-heal
-    val hasPrior =
-      CorpusExport.listDataFiles(fs,
-        new org.apache.hadoop.fs.Path(manifestPath)).nonEmpty
-    CorpusExport.checkDataWithoutManifest("exportWebDatasetIncremental",
-      fs, outDir, hasPrior, generation)
-    val allPrior: Option[DataFrame] =
-      if (hasPrior) Some(spark.read.parquet(manifestPath).localCheckpoint())
-      else None
-    val allGens = allPrior.map(_.select(col("gen")).distinct()
-      .collect().map(_.getLong(0)).toSet).getOrElse(Set.empty[Long])
-    require(allGens.forall(_ < generation) || allGens(generation),
-      s"exportWebDatasetIncremental: generation $generation would be a " +
-        s"NEW generation below already-landed ones at $outDir — " +
-        "appending out of order would re-number history under a " +
-        "mounted trainer")
     val labeled = Pipelines.splitByMd5Prefix(delta, idCol, cuts)
-    val binaryCols = if (allGens.exists(_ > generation)) {
-      // NON-latest replay: the shard count must reproduce the
-      // manifest's BEFORE the live partitions are touched (the
-      // exportShardsIncremental staged-swap contract) — stage the tars
-      // under an app-keyed underscore dir, count, and only a match
-      // swaps the gen dirs in; on refusal the corpus dir is untouched
-      val staging =
-        s"$outDir/_gen_staging_${spark.sparkContext.applicationId}"
-      val stagingP = new org.apache.hadoop.fs.Path(staging)
-      try {
-        val bc = writeTarShards(labeled, idCol, contentCols, staging,
-          targetShardBytes, gen = Some(generation))
-        val newN = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$staging/split=*/gen=$generation/shard-*.tar")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .length.toLong
-        val oldN = allPrior.get.where(col("gen") === generation).count()
-        require(newN == oldN,
-          s"exportWebDatasetIncremental: replaying NON-latest " +
-            s"generation $generation produced $newN shards where the " +
-            s"manifest holds $oldN — the re-derived shard ids would " +
-            "collide with or gap against later generations'; only a " +
-            "same-data (same shard count) replay of a non-latest " +
-            "generation is legal. The corpus dir is UNTOUCHED (the " +
-            "mismatch was caught at the staging step, before any live " +
-            "partition was replaced)")
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$outDir/split=*/gen=$generation")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .foreach(st => fs.delete(st.getPath, true))
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-            s"$staging/split=*/gen=$generation")))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .foreach { st =>
-            val dest = new org.apache.hadoop.fs.Path(
-              new org.apache.hadoop.fs.Path(outDir,
-                st.getPath.getParent.getName), st.getPath.getName)
-            fs.mkdirs(dest.getParent)
-            require(fs.rename(st.getPath, dest),
-              s"exportWebDatasetIncremental: swap rename ${st.getPath} " +
-                s"-> $dest failed")
-          }
-        bc
-      } finally { fs.delete(stagingP, true); () }
-    } else {
-      // replay idempotency: this generation's own dirs are replaced
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-          s"$outDir/split=*/gen=$generation")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .foreach(st => fs.delete(st.getPath, true))
-      writeTarShards(labeled, idCol, contentCols, outDir,
-        targetShardBytes, gen = Some(generation))
-    }
-    val genGlob = s"split=*/gen=$generation/shard-*.tar"
-    val hasShards = fs.exists(rootPath) && Option(
-      fs.globStatus(new org.apache.hadoop.fs.Path(rootPath, genGlob)))
-      .exists(_.nonEmpty)
-    val genManifest =
-      (if (hasShards)
-        buildTarManifest(spark, outDir, contentCols, binaryCols, genGlob)
-      else emptyManifest(spark))
-        .withColumn("gen", lit(generation))
-    val prior = allPrior
-      .getOrElse(genManifest.withColumn("shard_id", lit(0L)).limit(0))
-      .where(col("gen") =!= generation)
-    val maxId = prior.where(col("gen") < generation)
-      .agg(coalesce(max("shard_id"), lit(-1L)))
-      .head().getLong(0)
-    // unpartitioned window: one generation's manifest — a row per shard
-    val fresh = genManifest.withColumn("shard_id",
-      lit(maxId) + row_number().over(org.apache.spark.sql.expressions
-        .Window.orderBy(col("split"), col("shard_path"))).cast("long"))
-    // (the NON-latest-replay shard-count guard ran pre-swap above, on
-    // the staged tars, so a refusal leaves data ≡ manifest)
-    // atomic staging commit (the exportShardsIncremental contract)
-    val stagingPath =
-      new org.apache.hadoop.fs.Path(s"$outDir/_manifest_staging")
-    val manifestP = new org.apache.hadoop.fs.Path(manifestPath)
-    prior.unionByName(fresh.select(prior.columns.map(col): _*))
-      .write.mode("overwrite").parquet(stagingPath.toString)
-    if (fs.exists(manifestP)) fs.delete(manifestP, true)
-    require(fs.rename(stagingPath, manifestP),
-      s"exportWebDatasetIncremental: rename $stagingPath -> $manifestP failed")
-    spark.read.parquet(manifestPath)
+    CorpusExport.appendGeneration("exportWebDatasetIncremental", spark,
+        outDir, generation, shardGlob = "shard-*.tar")(
+      root => writeTarShards(labeled, idCol, contentCols, root,
+        targetShardBytes, gen = Some(generation)),
+      () => buildTarManifest(spark, outDir, contentCols,
+        binaryColsOf(labeled, contentCols),
+        s"split=*/gen=$generation/shard-*.tar"))
   }
 
-  private def emptyManifest(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, Long, Long, String, Long)]
-      .toDF("split", "shard_path", "rows", "bytes",
-        "content_md5", "content_xor")
-  }
+  /** Content columns stored RAW (binary) rather than as UTF-8 strings:
+    * a string cast would mangle any non-UTF-8 byte sequence. */
+  private def binaryColsOf(df: DataFrame, contentCols: Seq[String])
+      : Set[String] =
+    contentCols.filter(c =>
+      df.schema(c).dataType == org.apache.spark.sql.types.BinaryType).toSet
 
   /** The shared encode → size → route → write core of both exports:
     * key-integrity audit, tar-framing size probe, per-(split, shard)
     * routing with identity-token task placement, and the streaming tar
-    * write (into `split=…/` or `split=…/gen=N/` per `gen`). Returns
-    * the binary content-column set for the manifest's hash rule. */
+    * write (into `split=…/` or `split=…/gen=N/` per `gen`). */
   private def writeTarShards(labeled: DataFrame, idCol: String,
                              contentCols: Seq[String], outDir: String,
                              targetShardBytes: Long,
-                             gen: Option[Long]): Set[String] = {
+                             gen: Option[Long]): Unit = {
     val spark = labeled.sparkSession
-    // binary columns (the multimodal payload case) pass through RAW —
-    // a string cast would mangle any non-UTF-8 byte sequence; all other
-    // types store their string form in UTF-8
-    val binaryCols = contentCols.filter(c =>
-      labeled.schema(c).dataType == org.apache.spark.sql.types.BinaryType)
-      .toSet
+    // binary columns (the multimodal payload case) pass through RAW;
+    // all other types store their string form in UTF-8
+    val binaryCols = binaryColsOf(labeled, contentCols)
     def payloadCol(c: String) =
       if (binaryCols(c)) col(c) else col(c).cast("string")
     // exact tar framing per member: 512 B header + payload padded to 512
@@ -311,15 +203,8 @@ object WebDataset {
       if (nAll > 0) statRows.map(_.getDouble(1)).sum / nAll else 1.0
     val bytesPerSample = math.max(1.0, bAll)
     val rowsPerShard = math.max(1L, (targetShardBytes / bytesPerSample).toLong)
-    val splitCounts =
-      statRows.map(r => r.getString(0) -> r.getLong(2)).toMap
-    val shardsPerSplit = splitCounts.map { case (s, n) =>
-      s -> math.max(1L, (n + rowsPerShard - 1L) / rowsPerShard)
-    }
-    val kExpr = shardsPerSplit.foldLeft(lit(1L)) { case (els, (s, k)) =>
-      when(col("split") === s, lit(k)).otherwise(els)
-    }
-    val totalShards = math.max(1L, shardsPerSplit.values.sum).toInt
+    val (shardsPerSplit, kExpr, totalShards) = CorpusExport.shardPlan(
+      statRows.map(r => r.getString(0) -> r.getLong(2)).toMap, rowsPerShard)
     val cols = contentCols
     // writer-task balance: hash-repartitioning on (split, __shard)
     // collides distinct shards into shared tasks and leaves others idle
@@ -363,7 +248,6 @@ object WebDataset {
     projected.foreachPartition { (it: Iterator[Row]) =>
       writePartitionTars(it, out, cols, isBinary, serConf.value, genSub)
     }
-    binaryCols
   }
 
   /** One routing token per partition index: token[p] is the smallest

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** The shared driver harness ([[Harness]]): entry selection, full
   * materialization, and the structural rule that keeps every main on it. */
@@ -42,25 +40,15 @@ class HarnessSuite extends AnyFunSuite {
     assert(calls.value == n)
   }
 
-  /** Files under `src/main` whose text contains `needle`. */
-  private def filesWith(needle: String): Set[String] = {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root (no $root)")
-    val files = Files.walk(root)
-    try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains(needle))
-      .map((p: Path) => root.relativize(p).toString).toSet
-    finally files.close()
-  }
-
   test("structure: only Engine builds a session in src/main") {
-    assert(filesWith("SparkSession.builder") == Set("graft/Engine.scala"))
+    assert(SourceTree.filesWith("SparkSession.builder") ==
+      Set("graft/Engine.scala"))
   }
 
   test("structure: only Harness.materialize writes to the noop format") {
     val noop = "format(\"noop\")"
-    assert(filesWith(noop) == Set("graft/Harness.scala"))
-    assert(Files.readString(Paths.get("src/main/scala/graft/Harness.scala"))
+    assert(SourceTree.filesWith(noop) == Set("graft/Harness.scala"))
+    assert(SourceTree.read("graft/Harness.scala")
       .split(java.util.regex.Pattern.quote(noop), -1).length == 2)
   }
 }

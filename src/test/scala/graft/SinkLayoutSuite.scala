@@ -1,7 +1,8 @@
 package graft
 
-import graft.sources.{City, OrcTableSink}
+import graft.sources.{City, CorpusExport, OrcTableSink, WebDataset}
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -368,102 +369,218 @@ class SinkLayoutSuite extends AnyFunSuite {
       s"cross-batch dedup skipped (hasLanded probe failed): $landed")
   }
 
-  test("corpus export incremental: a data dir with no _manifest refuses loudly; _manifest_staging restores it") {
-    import graft.sources.CorpusExport
-    val dir = Files.createTempDirectory("graft_mf_guard")
-    val out = dir.toString
-    val docs = Tables.documents(spark, TestSpark.sfDir)
-      .select("doc_id", "text", "lang", "source")
-    def append(df: org.apache.spark.sql.DataFrame, gen: Long) =
-      CorpusExport.exportShardsIncremental(df, "doc_id",
-        contentCols = Seq("doc_id", "text"), outDir = out,
-        generation = gen, targetShardBytes = 64L * 1024)
-    val m0 = append(docs.where(col("doc_id") % 2 === 0), 0L).collect()
-    // simulate the commit crash window: _manifest deleted, the full
-    // union still at _manifest_staging (the atomic-commit layout)
-    Files.move(dir.resolve("_manifest"), dir.resolve("_manifest_staging"))
-    val e = intercept[IllegalArgumentException](
-      append(docs.where(col("doc_id") % 2 === 1), 1L))
-    assert(e.getMessage.contains("_manifest_staging"), e.getMessage)
-    // no gen-1 orphans from the refused append
-    assert(!listTree(dir).exists(_.contains("gen=1/")))
-    // recovery: rename staging back, the append proceeds and gen 0's
-    // rows survive with their original ids
-    Files.move(dir.resolve("_manifest_staging"), dir.resolve("_manifest"))
-    val m1 = append(docs.where(col("doc_id") % 2 === 1), 1L).collect()
-    assert(m1.filter(_.getLong(6) == 0L).map(_.getLong(7)).sorted.toSeq ==
-      m0.map(_.getLong(7)).sorted.toSeq)
-    assert(spark.read.parquet(out).count() == docs.count())
+  /** One incremental export over (doc_id, text): `append(df, outDir,
+    * generation, targetShardBytes)` lands a generation and returns the
+    * manifest; `tableRows(outDir)` counts the rows its data files hold.
+    * `reproducibleShards`: a same-data replay rewrites the same shard
+    * names with the same bytes (tars), not fresh job-keyed part files. */
+  private case class IncrementalExport(name: String,
+      append: (DataFrame, String, Long, Long) => DataFrame,
+      tableRows: String => Long,
+      reproducibleShards: Boolean)
 
-    // data for OTHER generations with neither manifest nor staging =
-    // foreign dir / truly lost manifest — refused (gens 0 and 1 exist,
-    // replaying 1 alone can't account for gen 0's data)
-    val mfBytes = listTree(dir).filter(_.startsWith("_manifest"))
-    Files.walk(dir.resolve("_manifest")).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete)
-    val eLost = intercept[IllegalArgumentException](
-      append(docs.where(col("doc_id") % 2 === 1), 1L))
-    assert(eLost.getMessage.contains("neither _manifest nor"),
-      eLost.getMessage)
-    assert(mfBytes.nonEmpty) // the guard really ran against lost state
+  /** The two exports that share the generation-commit protocol
+    * (`CorpusExport.appendGeneration`); its tests below run on both. */
+  private val incrementalExports = Seq(
+    IncrementalExport("corpus export",
+      (df, out, gen, target) => CorpusExport.exportShardsIncremental(df,
+        "doc_id", Seq("doc_id", "text"), out, gen,
+        targetShardBytes = target),
+      out => spark.read.parquet(out).count(),
+      reproducibleShards = false),
+    IncrementalExport("WebDataset",
+      (df, out, gen, target) => WebDataset.exportWebDatasetIncremental(df,
+        "doc_id", Seq("doc_id", "text"), out, gen,
+        targetShardBytes = target),
+      out => WebDataset.readWebDataset(spark, out,
+        glob = "split=*/gen=*/shard-*.tar")
+        .where(col("member").endsWith(".doc_id")).count(),
+      reproducibleShards = true))
+
+  /** Manifest rows modulo shard_path: (split, rows, bytes, content_md5,
+    * content_xor, gen, shard_id), sorted. */
+  private def manifestKey(rows: Array[Row]) = rows.map(r =>
+    (r.getString(0), r.getLong(2), r.getLong(3), r.getString(4),
+      r.getLong(5), r.getLong(6), r.getLong(7))).sortBy(_.toString).toSeq
+
+  for (x <- incrementalExports) {
+    test(s"${x.name} incremental: a data dir with no _manifest refuses loudly; _manifest_staging restores it") {
+      val dir = Files.createTempDirectory("graft_mf_guard")
+      val out = dir.toString
+      val docs = Tables.documents(spark, TestSpark.sfDir)
+        .select("doc_id", "text", "lang", "source")
+      def append(df: DataFrame, gen: Long) =
+        x.append(df, out, gen, 64L * 1024)
+      val m0 = append(docs.where(col("doc_id") % 2 === 0), 0L).collect()
+      // simulate the commit crash window: _manifest deleted, the full
+      // union still at _manifest_staging (the atomic-commit layout)
+      Files.move(dir.resolve("_manifest"), dir.resolve("_manifest_staging"))
+      val e = intercept[IllegalArgumentException](
+        append(docs.where(col("doc_id") % 2 === 1), 1L))
+      assert(e.getMessage.contains("_manifest_staging"), e.getMessage)
+      // no gen-1 orphans from the refused append
+      assert(!listTree(dir).exists(_.contains("gen=1/")))
+      // recovery: rename staging back, the append proceeds and gen 0's
+      // rows survive with their original ids
+      Files.move(dir.resolve("_manifest_staging"), dir.resolve("_manifest"))
+      val m1 = append(docs.where(col("doc_id") % 2 === 1), 1L).collect()
+      assert(m1.filter(_.getLong(6) == 0L).map(_.getLong(7)).sorted.toSeq ==
+        m0.map(_.getLong(7)).sorted.toSeq)
+      assert(x.tableRows(out) == docs.count())
+
+      // data for OTHER generations with neither manifest nor staging =
+      // foreign dir / truly lost manifest — refused (gens 0 and 1 exist,
+      // replaying 1 alone can't account for gen 0's data)
+      val mfBytes = listTree(dir).filter(_.startsWith("_manifest"))
+      Files.walk(dir.resolve("_manifest")).iterator().asScala.toSeq.reverse
+        .foreach(Files.delete)
+      val eLost = intercept[IllegalArgumentException](
+        append(docs.where(col("doc_id") % 2 === 1), 1L))
+      assert(eLost.getMessage.contains("neither _manifest nor"),
+        eLost.getMessage)
+      assert(mfBytes.nonEmpty) // the guard really ran against lost state
+    }
+
+    test(s"${x.name} incremental: a crashed FIRST append self-heals on replay; non-latest replays must reproduce their shard count") {
+      val dir = Files.createTempDirectory("graft_gen0_crash")
+      val out = dir.toString
+      val docs = Tables.documents(spark, TestSpark.sfDir)
+        .select("doc_id", "text", "lang", "source")
+      def append(df: DataFrame, gen: Long, target: Long = 64L * 1024) =
+        x.append(df, out, gen, target)
+      // simulate a crash DURING the first append's data write: data for
+      // exactly this generation exists, no manifest, no staging — the
+      // replay must proceed (it clears its own leftovers) instead of
+      // wedging the stream on every retry
+      val even = docs.where(col("doc_id") % 2 === 0)
+      append(even, 0L)
+      Files.walk(dir.resolve("_manifest")).iterator().asScala.toSeq.reverse
+        .foreach(Files.delete)
+      val m0 = append(even, 0L).collect() // the self-healing replay
+      assert(m0.nonEmpty && m0.forall(_.getLong(6) == 0L))
+      assert(m0.map(_.getLong(2)).sum == even.count())
+      assert(x.tableRows(out) == even.count())
+
+      // non-latest replay that changes the generation's SHARD COUNT
+      // (here: same data, 16× smaller roll target → more shards): the
+      // re-derived ids would collide with gen 1's — refused loudly,
+      // and BEFORE any live partition is touched (the guard runs on the
+      // STAGED write): data bytes and manifest stay exactly as they were
+      append(docs.where(col("doc_id") % 2 === 1), 1L)
+      def dataBytes() = listTree(dir)
+        .filterNot(f => f.endsWith("_SUCCESS") || f.contains(".crc") ||
+          f.startsWith("_manifest") || f.startsWith("_gen_staging"))
+        .map(f => f -> java.util.Arrays.hashCode(
+          Files.readAllBytes(dir.resolve(f)))).toMap
+      val before = dataBytes()
+      val mfBefore = spark.read.parquet(s"$out/_manifest").collect()
+      val eCollide = intercept[IllegalArgumentException](
+        append(even, 0L, target = 4L * 1024))
+      assert(eCollide.getMessage.contains("NON-latest"), eCollide.getMessage)
+      assert(eCollide.getMessage.contains("UNTOUCHED"), eCollide.getMessage)
+      assert(dataBytes() == before,
+        "refused non-latest replay touched live data partitions")
+      def rows(m: Array[Row]) = m.map(_.toString).sorted.toSeq
+      assert(rows(spark.read.parquet(s"$out/_manifest").collect()) ==
+        rows(mfBefore), "refused non-latest replay touched the manifest")
+      assert(!listTree(dir).exists(_.contains("_gen_staging")),
+        "refused replay leaked its staging dir")
+      // the same-data replay of gen 0 proceeds through the staged SWAP
+      // (count matches → partitions replaced) and keeps data ≡
+      // manifest with gen 0's original ids
+      val mRestore = append(even, 0L).collect()
+      assert(manifestKey(mRestore) == manifestKey(mfBefore))
+      if (x.reproducibleShards) {
+        assert(rows(mRestore) == rows(mfBefore))
+        assert(dataBytes() == before, "same-data swap changed shard bytes")
+      }
+      assert(x.tableRows(out) == docs.count())
+      assert(!listTree(dir).exists(_.contains("_gen_staging")),
+        "successful staged replay leaked its staging dir")
+
+      // empty delta: a generation with no rows lands no shards and
+      // keeps the prior manifest rows exactly (no gen-2 rows appear)
+      val mEmpty = append(docs.where(lit(false)), 2L).collect()
+      assert(manifestKey(mEmpty) == manifestKey(mRestore))
+      assert(!listTree(dir).exists(_.contains("gen=2")))
+    }
+
+    test(s"${x.name} incremental: a replay that no longer reaches a split drops that split's old shards") {
+      val out = Files.createTempDirectory("graft_stale_split").toString
+      val docs = Tables.documents(spark, TestSpark.sfDir)
+        .select("doc_id", "text")
+      x.append(docs, out, 0L, 64L * 1024)
+      val train = graft.operators.Pipelines.splitByMd5Prefix(docs, "doc_id")
+        .where(col("split") === "train").drop("split")
+      val nTrain = train.count()
+      assert(nTrain > 0 && nTrain < docs.count())
+      // replaying gen 0 with only the train rows replaces the whole
+      // generation: the old val/test shards must not survive on disk
+      val m = x.append(train, out, 0L, 64L * 1024).collect()
+      assert(m.map(_.getString(0)).toSet == Set("train"))
+      assert(m.map(_.getLong(2)).sum == nTrain)
+      assert(x.tableRows(out) == nTrain)
+    }
   }
 
-  test("corpus export incremental: a crashed FIRST append self-heals on replay; non-latest replays must reproduce their shard count") {
-    import graft.sources.CorpusExport
-    val dir = Files.createTempDirectory("graft_gen0_crash")
+  test("corpus export incremental: a crashed attempt's committed task output under _temporary never lands") {
+    val dir = Files.createTempDirectory("graft_stale_tmp")
     val out = dir.toString
     val docs = Tables.documents(spark, TestSpark.sfDir)
-      .select("doc_id", "text", "lang", "source")
-    def append(df: org.apache.spark.sql.DataFrame, gen: Long) =
-      CorpusExport.exportShardsIncremental(df, "doc_id",
-        contentCols = Seq("doc_id", "text"), outDir = out,
-        generation = gen, targetShardBytes = 64L * 1024)
-    // simulate a crash DURING the first append's data write: data for
-    // exactly this generation exists, no manifest, no staging — the
-    // replay must proceed (dynamic overwrite replaces its own
-    // partitions) instead of wedging the stream on every retry
-    val even = docs.where(col("doc_id") % 2 === 0)
-    append(even, 0L)
-    Files.walk(dir.resolve("_manifest")).iterator().asScala.toSeq.reverse
-      .foreach(Files.delete)
-    val m0 = append(even, 0L).collect() // the self-healing replay
-    assert(m0.nonEmpty && m0.forall(_.getLong(6) == 0L))
-    assert(m0.map(_.getLong(2)).sum == even.count())
-
-    // non-latest replay that changes the generation's SHARD COUNT
-    // (here: same data, 16× smaller roll target → more shards): the
-    // re-derived ids would collide with gen 1's — refused loudly,
-    // and BEFORE any live partition is touched (the guard runs on the
-    // STAGED write): data files and manifest stay exactly as they were
-    append(docs.where(col("doc_id") % 2 === 1), 1L)
-    def dataFiles() = listTree(dir)
-      .filterNot(f => f.endsWith("_SUCCESS") || f.contains(".crc") ||
-        f.startsWith("_manifest") || f.startsWith("_gen_staging"))
-      .toSet
-    val filesBefore = dataFiles()
-    val mfBefore = spark.read.parquet(s"$out/_manifest").collect()
-      .map(_.toString).sorted.toSeq
-    val eCollide = intercept[IllegalArgumentException](
-      CorpusExport.exportShardsIncremental(even, "doc_id",
-        contentCols = Seq("doc_id", "text"), outDir = out,
-        generation = 0L, targetShardBytes = 4L * 1024))
-    assert(eCollide.getMessage.contains("NON-latest"), eCollide.getMessage)
-    assert(eCollide.getMessage.contains("UNTOUCHED"), eCollide.getMessage)
-    assert(dataFiles() == filesBefore,
-      "refused non-latest replay touched live data partitions")
-    assert(spark.read.parquet(s"$out/_manifest").collect()
-      .map(_.toString).sorted.toSeq == mfBefore,
-      "refused non-latest replay touched the manifest")
-    assert(!listTree(dir).exists(_.contains("_gen_staging")),
-      "refused replay leaked its staging dir")
-    // the same-data replay of gen 0 proceeds through the staged SWAP
-    // path (count matches → partitions replaced) and keeps data ≡
-    // manifest with gen 0's original ids
-    val mRestore = append(even, 0L).collect()
-    assert(mRestore.map(_.getLong(2)).sum == docs.count())
+      .select("doc_id", "text")
+    // an application that dies after some tasks committed but before
+    // the job committed leaves their output in the job dir
+    // outDir/_temporary/0,
+    // where Spark's v1 FileOutputCommitter merges every committed task
+    // dir at the next commitJob of a write into outDir
+    val stale = Files.createTempDirectory("graft_stale_part")
+    docs.limit(5).coalesce(1).write.mode("overwrite").parquet(stale.toString)
+    val part = Files.list(stale).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val task = dir.resolve("_temporary/0/task_stale/split=train/gen=0")
+    Files.createDirectories(task)
+    Files.copy(part, task.resolve(part.getFileName))
+    val m = CorpusExport.exportShardsIncremental(docs, "doc_id",
+      Seq("doc_id", "text"), out, 0L, targetShardBytes = 64L * 1024)
+      .collect()
     assert(spark.read.parquet(out).count() == docs.count())
-    assert(!listTree(dir).exists(_.contains("_gen_staging")),
-      "successful staged replay leaked its staging dir")
+    assert(m.map(_.getLong(2)).sum == docs.count())
+  }
+
+  test("WebDataset incremental: a replay refused by the key audit leaves the landed generation untouched") {
+    val dir = Files.createTempDirectory("graft_wds_refused")
+    val out = dir.toString
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+      .select("doc_id", "text")
+    def append(df: DataFrame) = WebDataset.exportWebDatasetIncremental(df,
+      "doc_id", Seq("doc_id", "text"), out, 0L,
+      targetShardBytes = 64L * 1024)
+    append(docs)
+    def tarBytes() = listTree(dir).filter(_.endsWith(".tar"))
+      .map(f => f -> java.util.Arrays.hashCode(
+        Files.readAllBytes(dir.resolve(f)))).toMap
+    def manifest() = spark.read.parquet(s"$out/_manifest").collect()
+      .map(_.toString).sorted.toSeq
+    val (tarsBefore, mfBefore) = (tarBytes(), manifest())
+    val nullKey = docs.limit(1)
+      .withColumn("doc_id", lit(null).cast(docs.schema("doc_id").dataType))
+    for ((bad, msg) <- Seq(docs.union(docs.limit(1)) -> "not unique",
+                           docs.union(nullKey) -> "null keys")) {
+      val e = intercept[IllegalArgumentException](append(bad))
+      assert(e.getMessage.contains(msg), e.getMessage)
+      assert(tarBytes() == tarsBefore, s"refused replay ($msg) touched tars")
+      assert(manifest() == mfBefore,
+        s"refused replay ($msg) touched the manifest")
+      assert(!listTree(dir).exists(_.contains("_gen_staging")))
+    }
+  }
+
+  test("structure: the generation-commit protocol lives in CorpusExport alone; no dynamic overwrite there") {
+    for (staging <- Seq("_manifest_staging", "_gen_staging_"))
+      assert(SourceTree.filesWith(staging) ==
+        Set("graft/sources/CorpusExport.scala"), staging)
+    assert(!SourceTree.read("graft/sources/CorpusExport.scala")
+      .contains("partitionOverwriteMode"))
   }
 
   test("S7: writeBatchTargetBytes probes through the destination's filesystem (scheme-qualified file:/// warehouse)") {
@@ -500,48 +617,6 @@ class SinkLayoutSuite extends AnyFunSuite {
       "sizing probe left its staging dir behind")
     // and the write itself is intact
     assert(spark.read.orc(s"$warehouse/t").count() == 3000L)
-  }
-
-  test("WebDataset incremental: a NON-latest replay with a changed shard count refuses pre-swap — tars and manifest untouched") {
-    import graft.sources.WebDataset
-    val dir = Files.createTempDirectory("graft_wds_nonlatest")
-    val out = dir.toString
-    val docs = Tables.documents(spark, TestSpark.sfDir)
-      .select("doc_id", "text", "lang", "source")
-    val even = docs.where(col("doc_id") % 2 === 0)
-    val odd = docs.where(col("doc_id") % 2 === 1)
-    def append(df: org.apache.spark.sql.DataFrame, gen: Long,
-               target: Long = 64L * 1024) =
-      WebDataset.exportWebDatasetIncremental(df, "doc_id",
-        contentCols = Seq("doc_id", "text"), outDir = out,
-        generation = gen, targetShardBytes = target)
-    append(even, 0L)
-    val m1 = append(odd, 1L).collect()
-    def tarBytes() = listTree(dir).filter(_.endsWith(".tar"))
-      .map(f => f -> java.util.Arrays.hashCode(
-        Files.readAllBytes(dir.resolve(f)))).toMap
-    val before = tarBytes()
-    // same data, 16× smaller target → more gen-0 shards → refused,
-    // with every live tar and the manifest byte-untouched
-    val e = intercept[IllegalArgumentException](
-      append(even, 0L, target = 4L * 1024))
-    assert(e.getMessage.contains("NON-latest"), e.getMessage)
-    assert(e.getMessage.contains("UNTOUCHED"), e.getMessage)
-    assert(tarBytes() == before, "refused replay touched live tars")
-    assert(!listTree(dir).exists(_.contains("_gen_staging")),
-      "refused replay leaked its staging dir")
-    val mAfter = spark.read.parquet(s"$out/_manifest").collect()
-    def key(rows: Array[org.apache.spark.sql.Row]) = rows.map(r =>
-      (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getString(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-      .sortBy(_.toString).toSeq
-    assert(key(mAfter) == key(m1), "refused replay touched the manifest")
-    // the same-data replay swaps cleanly: identical manifest, identical
-    // tar bytes (tar content is deterministic)
-    val m2 = append(even, 0L).collect()
-    assert(key(m2) == key(m1))
-    assert(tarBytes() == before)
-    assert(!listTree(dir).exists(_.contains("_gen_staging")))
   }
 
   test("WebDataset: truncated tar and duplicate/null keys fail loudly") {
@@ -660,22 +735,13 @@ class SinkLayoutSuite extends AnyFunSuite {
     val m2 = append(odd, 1L).collect()
     assert(key(m2) == key(m1))
 
-    // guards: out-of-order refuse leaves no orphans; missing manifest
-    // with data present refuses with the staging recovery hint
-    val m3 = append(odd, 3L).collect()
+    // guard: out-of-order refuse leaves no orphans (the other protocol
+    // guards run on both exports in the looped tests above)
+    append(odd, 3L)
     val before = tars().toSet
     val e1 = intercept[IllegalArgumentException](append(even, 2L))
     assert(e1.getMessage.contains("out of order"), e1.getMessage)
     assert(tars().toSet == before)
-    Files.move(dir.resolve("_manifest"), dir.resolve("_manifest_staging"))
-    val e2 = intercept[IllegalArgumentException](append(even, 4L))
-    assert(e2.getMessage.contains("_manifest_staging"), e2.getMessage)
-    Files.move(dir.resolve("_manifest_staging"), dir.resolve("_manifest"))
-
-    // empty delta: a generation with no rows lands no tars and keeps
-    // the prior manifest rows exactly (no gen-4 rows appear)
-    val m4 = append(docs.where(lit(false)), 4L).collect()
-    assert(key(m4) == key(m3))
   }
 
   test("WebDataset export: ustar tar shards, byte-reproducible, manifest \u2261 parsed tars \u2261 table") {
